@@ -42,7 +42,10 @@ import org.apache.spark.sql.types._
   * much anyway). Both bases and the view bucket by the SAME key, so at
   * matching bucket counts the join is bucket-aligned. Views that lag
   * past either base's retention horizon fail loudly (changesBetween's
-  * expiry contract).
+  * expiry contract). A fold whose input — the manifest rows of both
+  * ranges and both sides' live files — is at most
+  * [[LakeTable.InterpretedMaxRows]] (200 k) runs with Spark's
+  * interpreted evaluation instead of compiled code (see there).
   */
 final class JoinView private (
     spark: SparkSession,
@@ -88,81 +91,95 @@ final class JoinView private (
     val toR = math.min(right.currentSnapshotId, fromR + maxSnapshots.toLong)
     if (toL <= fromL && toR <= fromR) return None
 
-    // 1. affected keys: every key either range touched. A fresh view
-    // (frontier −1) bootstraps from the side's LIVE key set instead of
-    // its changelog — same result, works on expired histories, and skips
-    // dead keys (a tombstone for a row the view never had is noise).
-    // A fresh RIGHT side contributes nothing to the key set: right rows
-    // only matter where a left row exists, and at bootstrap the left
-    // side enumerates those keys itself.
-    val keyType = left.currentSchema.sparkSchema(key).dataType
-    val none = spark.emptyDataFrame.select(lit(null).cast(keyType).as(key)).limit(0)
     val bootstrap = fromL < 0 // a view always folds its left side first
-    val keysL =
-      if (bootstrap) left.mergedWinners(Some(toL), Seq(key))
-        .filter(!col(LakeTable.TombCol)).select(col(key))
-      else if (toL > fromL) left.changesBetween(fromL, toL).select(col(key))
-      else none
-    val keysR =
-      if (!bootstrap && toR > fromR) right.changesBetween(fromR, toR)
-        .select(col(right.keyCol).cast(keyType).as(key))
-      else none
-    val affected = keysL.unionByName(keysR).distinct()
-      .localCheckpoint() // bounded: changed keys
-    // 2. current winners of the affected keys, each side as-of its fold
-    // target. Left keeps tombstones (they become view tombstones).
-    // ACCESS PATH: when the affected-key set is bounded (every steady-
-    // state fold; the bootstrap and all-keys batches are not), the keys
-    // are collected driver-side and the winner reads open ONLY the keys'
-    // buckets' files, bloom-skipped within each bucket
-    // ([[LakeTable.winnersForKeySubset]]) — the fold's IO scales with
-    // the BATCH, not the table. Beyond the cap the full merged scan is
-    // the better plan anyway (most files would survive pruning).
-    val probe = affected.limit(JoinView.MaxPrunedKeys + 1)
-      .collect().map(_.get(0)).toSeq
-    val prunable = probe.nonEmpty && probe.length <= JoinView.MaxPrunedKeys
-    val lwAll =
-      if (probe.isEmpty) left.mergedWinners(Some(toL)).limit(0)
-      else if (prunable) left.winnersForKeySubset(probe, Some(toL))
-      else left.mergedWinners(Some(toL))
-    val rwAll =
-      if (probe.isEmpty) right.mergedWinners(Some(toR), rightCols).limit(0)
-      else if (prunable) right.winnersForKeySubset(probe, Some(toR), rightCols)
-      else right.mergedWinners(Some(toR), rightCols)
-    lastFoldFiles = Some((lwAll.inputFiles.length, rwAll.inputFiles.length))
-    // row restriction to the affected keys stays a semi-join either way —
-    // winnersForKeySubset's contract: winners are exact only for the
-    // probe keys, so pruned reads MUST be key-restricted before use
-    val lw = lwAll
-      .join(affected, Seq(key), "left_semi")
-      .drop(LakeTable.LsnCol)
-    val rw = rwAll
-      .filter(!col(LakeTable.TombCol))
-      .drop(LakeTable.LsnCol, LakeTable.TombCol)
-      .join(affected.select(col(key).as(right.keyCol)),
-        Seq(right.keyCol), "left_semi")
-    // 3. bounded join + upsert. A key in `affected` with no left row was
-    // never inserted (or expired history): emit nothing for it — the view
-    // can't have a row to retract, because view rows only ever came from
-    // left rows.
-    val joined = lw.join(
-      rw.select(col(right.keyCol).as(key) +: rightCols.map(col): _*),
-      Seq(key), "left")
-    val leftPayload = left.currentSchema.sparkSchema.fieldNames.filterNot(_ == key).toSeq
-    // the view rows' lsn is the view's own (strictly increasing) epoch —
-    // NOT max(toL, toR), which repeats when one base is static (a later
-    // fold's rewrite would then TIE the old row in the view's max_by
-    // merge and an arbitrary winner could resurrect stale payloads or
-    // undead a deleted key)
-    val epoch = table.lastCommittedEpoch + 1
-    val outCols: Seq[Column] =
-      Seq(when(col(LakeTable.TombCol), "D").otherwise("U").as("op"),
-        col(key), lit(epoch).as("lsn")) ++
-        leftPayload.map(col) ++ rightCols.map(col)
-    val rows = joined.select(outCols: _*)
-    table.upsert(rows, epochId = epoch, reduce = false,
-      summary = Map(SumLeft -> toL.toString, SumRight -> toR.toString))
-    affected.unpersist()
+    // the files the fold opens: both ranges (not read at bootstrap) and,
+    // at most, both sides' live files (sized at each side's head — see
+    // MatView's fold sizing)
+    val reads =
+      (if (bootstrap) Nil
+       else left.changedFiles(fromL, toL) ++ right.changedFiles(fromR, toR)) ++
+        left.liveFiles() ++ right.liveFiles()
+    LakeTable.interpretedWhenSmall(Seq(spark, left.spark, right.spark), reads) {
+      // 1. affected keys: every key either range touched. A fresh view
+      // (frontier −1) bootstraps from the side's LIVE key set instead of
+      // its changelog — same result, works on expired histories, and
+      // skips dead keys (a tombstone for a row the view never had is
+      // noise). A fresh RIGHT side contributes nothing to the key set:
+      // right rows only matter where a left row exists, and at bootstrap
+      // the left side enumerates those keys itself.
+      val keyType = left.currentSchema.sparkSchema(key).dataType
+      val none = spark.emptyDataFrame.select(lit(null).cast(keyType).as(key)).limit(0)
+      val keysL =
+        if (bootstrap) left.mergedWinners(Some(toL), Seq(key))
+          .filter(!col(LakeTable.TombCol)).select(col(key))
+        else if (toL > fromL) left.changesBetween(fromL, toL).select(col(key))
+        else none
+      val keysR =
+        if (!bootstrap && toR > fromR) right.changesBetween(fromR, toR)
+          .select(col(right.keyCol).cast(keyType).as(key))
+        else none
+      val keys = keysL.unionByName(keysR).distinct()
+      // 2. current winners of the affected keys, each side as-of its fold
+      // target. Left keeps tombstones (they become view tombstones).
+      // ACCESS PATH: when the affected-key set is bounded (every steady-
+      // state fold; the bootstrap and all-keys batches are not), ONE
+      // action collects the keys driver-side; the winner reads open ONLY
+      // the keys' buckets' files, bloom-skipped within each bucket
+      // ([[LakeTable.winnersForKeySubset]]), and the collected keys, as a
+      // local relation, restrict them — the fold's IO scales with the
+      // BATCH, not the table. Beyond the cap the full merged scan is the
+      // better plan anyway (most files would survive pruning), and the
+      // key set is checkpointed instead.
+      val probeRows = keys.limit(JoinView.MaxPrunedKeys + 1).collect()
+      val probe = probeRows.map(_.get(0)).toSeq
+      val prunable = probe.length <= JoinView.MaxPrunedKeys
+      val affected =
+        if (prunable) spark.createDataFrame(
+          java.util.Arrays.asList(probeRows: _*), keys.schema)
+        else keys.localCheckpoint() // bounded only by the tables
+      val lwAll =
+        if (probe.isEmpty) left.mergedWinners(Some(toL)).limit(0)
+        else if (prunable) left.winnersForKeySubset(probe, Some(toL))
+        else left.mergedWinners(Some(toL))
+      val rwAll =
+        if (probe.isEmpty) right.mergedWinners(Some(toR), rightCols).limit(0)
+        else if (prunable) right.winnersForKeySubset(probe, Some(toR), rightCols)
+        else right.mergedWinners(Some(toR), rightCols)
+      lastFoldFiles = Some((lwAll.inputFiles.length, rwAll.inputFiles.length))
+      // row restriction to the affected keys stays a semi-join either way
+      // — winnersForKeySubset's contract: winners are exact only for the
+      // probe keys, so pruned reads MUST be key-restricted before use
+      val lw = lwAll
+        .join(affected, Seq(key), "left_semi")
+        .drop(LakeTable.LsnCol)
+      val rw = rwAll
+        .filter(!col(LakeTable.TombCol))
+        .drop(LakeTable.LsnCol, LakeTable.TombCol)
+        .join(affected.select(col(key).as(right.keyCol)),
+          Seq(right.keyCol), "left_semi")
+      // 3. bounded join + upsert. A key in `affected` with no left row was
+      // never inserted (or expired history): emit nothing for it — the
+      // view can't have a row to retract, because view rows only ever
+      // came from left rows.
+      val joined = lw.join(
+        rw.select(col(right.keyCol).as(key) +: rightCols.map(col): _*),
+        Seq(key), "left")
+      val leftPayload =
+        left.currentSchema.sparkSchema.fieldNames.filterNot(_ == key).toSeq
+      // the view rows' lsn is the view's own (strictly increasing) epoch
+      // — NOT max(toL, toR), which repeats when one base is static (a
+      // later fold's rewrite would then TIE the old row in the view's
+      // max_by merge and an arbitrary winner could resurrect stale
+      // payloads or undead a deleted key)
+      val epoch = table.lastCommittedEpoch + 1
+      val outCols: Seq[Column] =
+        Seq(when(col(LakeTable.TombCol), "D").otherwise("U").as("op"),
+          col(key), lit(epoch).as("lsn")) ++
+          leftPayload.map(col) ++ rightCols.map(col)
+      table.upsert(joined.select(outCols: _*), epochId = epoch, reduce = false,
+        summary = Map(SumLeft -> toL.toString, SumRight -> toR.toString))
+      if (!prunable) affected.unpersist()
+    }
     Some((toL, toR))
   }
 

@@ -80,6 +80,14 @@ import org.apache.spark.sql.types._
   * (changesBetween's expiry contract) instead of silently skipping —
   * rebuild via a fresh [[MatView.create]] + [[MatView.maintain]]
   * bootstrap.
+  *
+  * Execution mode: a fold whose input — the manifest rows of every file
+  * it opens: the range, the base unless captured before-images spare
+  * it, the view and its stacks — is at most
+  * [[LakeTable.InterpretedMaxRows]] (200 k) runs with Spark's
+  * interpreted evaluation, which compiles nothing; larger folds compile
+  * as before. A small fold's cost is fixed per Spark action, and most of
+  * it was code generation; each stack fold picks its own mode.
   */
 final class MatView private (
     spark: SparkSession,
@@ -299,7 +307,7 @@ final class MatView private (
     // stacks keep being used (no flapping; a spec or a shrunken table
     // never strands a maintained stack).
     val useStacks = stacked0.isEmpty ||
-      base.liveFiles().map(_.rows).sum >= MatView.StackMinBaseRows ||
+      LakeTable.rowsIn(base.liveFiles()) >= MatView.StackMinBaseRows ||
       stackCache.nonEmpty ||
       table.fs.exists(s"${table.root}/aux/cd-${stacked0.head.name}-pairs/meta")
     val aggsParsed: Seq[MatView.RecAgg] = if (useStacks) parsed0 else Seq.empty
@@ -318,16 +326,17 @@ final class MatView private (
         v1.maintainTo(head)
         v2.maintainTo(v1.table.currentSnapshotId)
       }
-      val full = base.mergedWinners(Some(head), neededBaseCols)
-        .filter(!col(LakeTable.TombCol))
-        .groupBy(groupCols.map(col): _*)
-        .agg(fullAggs.head, fullAggs.tail: _*)
-      val cols: Seq[Column] =
-        Seq(lit("I").as("op"), gkey.as(KeyCol), lit(head).as("lsn")) ++
-          groupCols.map(col) ++ aggNames.map(col)
-      val rows = full.select(cols: _*)
-      table.upsert(rows, epochId = head, reduce = false,
-        summary = Map("matview" -> "bootstrap"))
+      interpretedWhenSmall(base.liveFiles()) {
+        val full = base.mergedWinners(Some(head), neededBaseCols)
+          .filter(!col(LakeTable.TombCol))
+          .groupBy(groupCols.map(col): _*)
+          .agg(fullAggs.head, fullAggs.tail: _*)
+        val cols: Seq[Column] =
+          Seq(lit("I").as("op"), gkey.as(KeyCol), lit(head).as("lsn")) ++
+            groupCols.map(col) ++ aggNames.map(col)
+        table.upsert(full.select(cols: _*), epochId = head, reduce = false,
+          summary = Map("matview" -> "bootstrap"))
+      }
       return Some(head)
     }
 
@@ -341,28 +350,69 @@ final class MatView private (
       if (stacked.isEmpty) to0
       else math.max(to0,
         stacked.map(cd => stackFor(cd)._1.table.lastCommittedEpoch).max)
-    val key = base.keyCol
-    // 1. after-images: per-key winner WITHIN the range (tombstones ride
-    // along). This is only a candidate — late data means a range winner
-    // can still lose to the pre-range state on lsn (step 3).
-    // the range read projects to the view-relevant columns before the
-    // winner agg — like the before-image merge, the changelog scan never
-    // hauls payload the view doesn't aggregate
     // min/max entries ride the HYBRID path: extremes are decomposable
     // under inserts (least/greatest against the stored value), and only
     // a retraction AT a group's stored extreme forces that one group's
     // re-aggregation — an insert-only fold never touches the base at
     // all. count(distinct col) entries ride the same fold: the value is
     // the base `cnt` when col IS the key (one live row per key), else
-    // it is read from the internal stack maintained in lockstep below.
+    // it is read from the internal stack maintained in lockstep here,
+    // BEFORE this fold picks its execution mode — each stack fold picks
+    // its own from its own input.
     val hybrid = aggsParsed.nonEmpty
     if (hybrid) stacked.foreach { cd =>
       val (v1, v2) = stackFor(cd)
       v1.maintainTo(to)
       v2.maintainTo(v1.table.currentSnapshotId)
     }
+    // 2. before-images (the input of step 3): pre-range winners of the
+    // changed keys, tombstone winners INCLUDED — their lsn must keep
+    // guarding against late lower-lsn resurrection, exactly as in the
+    // base's own merge. Writer-captured preimages
+    // ([[LakeTable.beforeImages]]) serve this O(range) with NO base scan
+    // when the ingest ran with `capturePreimages` — the
+    // batch-proportional fold. Otherwise ONE left join does both the key
+    // restriction and the pairing, with the merge PROJECTED to the
+    // view-relevant columns — a (source, n_tok) view over a token-array
+    // table never drags the arrays through it.
+    val captured = base.beforeImages(from, to, neededBaseCols)
+    // the files the fold opens: the range, the base unless a capture
+    // serves the before-images (its files hold at most one row per range
+    // key and are not in the manifest) and no recompute merges it, and
+    // the view-side reads. The base is sized at its head, whose live set
+    // is already folded: sizing it as-of `from` would time-travel, and a
+    // range past the retention horizon must still fail on its changelog
+    // read, as it always has.
+    val mergesBase = captured.isEmpty || mm.nonEmpty || !hybrid && recomputed.nonEmpty
+    val reads = base.changedFiles(from, to) ++
+      (if (mergesBase) base.liveFiles() else Nil) ++
+      table.liveFiles() ++ stacked.flatMap(cd => stackFor(cd)._2.table.liveFiles())
+    interpretedWhenSmall(reads) {
+      val contribs = contributions(from, to, captured, mm, hybrid)
+      if (hybrid) foldHybrid(contribs, from, to, mm, cds, stacked)
+      else if (recomputed.nonEmpty) foldRecompute(contribs, from, to)
+      else foldDecomposable(contribs, from, to)
+    }
+    Some(to)
+  }
+
+  private def interpretedWhenSmall[T](reads: Seq[FileEntry])(body: => T): T =
+    LakeTable.interpretedWhenSmall(Seq(spark, base.spark), reads)(body)
+
+  /** Steps 1–3 for range (from, to]: the signed ±(groups…, cnt, sums…[,
+    * mm values…]) contribution rows of every key whose visible state the
+    * range changed, given the writer-`captured` before-images if any. */
+  private def contributions(from: Long, to: Long, captured: Option[DataFrame],
+      mm: Seq[(String, Boolean, String)], hybrid: Boolean): DataFrame = {
+    val key = base.keyCol
     def withVals(df: DataFrame): DataFrame =
       if (hybrid) withMmVals(withSumVals(df), mm) else withSumVals(df)
+    // 1. after-images: per-key winner WITHIN the range (tombstones ride
+    // along). This is only a candidate — late data means a range winner
+    // can still lose to the pre-range state on lsn (step 3). The range
+    // read projects to the view-relevant columns before the winner agg —
+    // like the before-image merge, the changelog scan never hauls
+    // payload the view doesn't aggregate.
     val delta = base.changesBetween(from, to).select(
       (key +: (neededBaseCols :+ LakeTable.LsnCol :+ LakeTable.TombCol))
         .distinct.map(col): _*)
@@ -371,18 +421,8 @@ final class MatView private (
       .groupBy(col(key))
       .agg(max_by(struct(payload.map(col): _*), col(LakeTable.LsnCol)).as("_w"))
       .select(col(key) +: payload.map(c => col(s"_w.$c").as(c)): _*))
-    // 2. before-images: pre-range winners of the changed keys, tombstone
-    // winners INCLUDED — their lsn must keep guarding against late
-    // lower-lsn resurrection, exactly as in the base's own merge.
-    // Writer-captured preimages ([[LakeTable.beforeImages]]) serve this
-    // O(range) with NO base scan when the ingest ran with
-    // `capturePreimages` — the batch-proportional fold. Otherwise ONE
-    // left join does both the key restriction and the pairing, with the
-    // merge PROJECTED to the view-relevant columns — a (source, n_tok)
-    // view over a token-array table never drags the arrays through it.
     val beforeAll = withVals(
-      base.beforeImages(from, to, neededBaseCols)
-        .getOrElse(base.mergedWinners(Some(from), neededBaseCols)))
+      captured.getOrElse(base.mergedWinners(Some(from), neededBaseCols)))
     val bCols = beforeAll.columns.filterNot(_ == key).toSeq
     val joined = rangeW.join(
       beforeAll.select(col(key) +: bCols.map(c => col(c).as(s"_b_$c")): _*),
@@ -393,7 +433,7 @@ final class MatView private (
     // (new winner) and minus (retracted before-image) ride ONE pass as
     // signed contribution structs.
     val blsn = col(s"_b_${LakeTable.LsnCol}")
-    val contribs = joined
+    joined
       .filter(blsn.isNull || col(LakeTable.LsnCol) > blsn)
       .select(explode(array(
         when(!col(LakeTable.TombCol), contribStruct("", +1, mm.size)),
@@ -401,146 +441,148 @@ final class MatView private (
           contribStruct("_b_", -1, mm.size)))).as("_c"))
       .filter(col("_c").isNotNull)
       .select(col("_c.*"))
-    if (hybrid) {
-      // HYBRID: per group, fold cnt/sum deltas decomposably AND track the
-      // inserted-side / retracted-side extremes of every min/max agg.
-      // Zero-net groups are KEPT when any extreme value moved (a value-
-      // only update can shift a min without touching cnt or sums).
-      val insRet: Seq[Column] = mm.zipWithIndex.flatMap { case ((n, isMin, _), i) =>
-        val v = col(s"$MmValPrefix$i")
-        val ins = when(col(CntCol) > 0, v)
-        val ret = when(col(CntCol) < 0, v)
-        Seq((if (isMin) min(ins) else max(ins)).as(s"_ins_$n"),
-          (if (isMin) min(ret) else max(ret)).as(s"_ret_$n"))
-      }
-      val aggs = (sum(CntCol).as(CntCol) +:
-        sums.map(s => sum(s._1).as(s._1))) ++ insRet
-      // with count-distinct entries, EVERY contribution group is kept: a
-      // zero-net (cnt, sums, extremes) fold can still move a distinct
-      // count (one key's x retracted, another's inserted), and contrib
-      // groups are bounded by the batch anyway
-      val touched =
-        if (cds.nonEmpty) lit(true)
-        else mm.map(m => col(s"_ins_${m._1}").isNotNull ||
-            col(s"_ret_${m._1}").isNotNull)
-          .foldLeft(sums.map(s => col(s._1) =!= 0)
-            .foldLeft(col(CntCol) =!= 0)(_ || _))(_ || _)
-      val gdelta = contribs
-        .groupBy(groupCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .filter(touched)
-        .withColumn(KeyCol, gkey)
-      val curCols: Seq[Column] =
-        Seq(col(KeyCol), col(CntCol).as("_oc")) ++
-          sums.map(s => col(s._1).as(s"_o_${s._1}")) ++
-          mm.map(m => col(m._1).as(s"_om_${m._1}"))
-      val (gdeltaCk, cur0) = viewCurrent(gdelta,
-        (CntCol +: sums.map(_._1)) ++ mm.map(_._1))
-      val cur = cur0.select(curCols: _*)
-      // a group needs recomputing ONLY when a retraction's value reaches
-      // its stored extreme (removing the possible last witness of the
-      // min/max) — or, defensively, when a retraction exists with no
-      // stored row to compare against. Groups whose cnt reaches 0 are
-      // tombstoned outright, no recompute needed.
-      val needRec =
-        if (mm.isEmpty) lit(false)
-        else mm.map { case (n, isMin, _) =>
-          val ret = col(s"_ret_$n"); val stored = col(s"_om_$n")
-          ret.isNotNull && (stored.isNull ||
-            (if (isMin) ret <= stored else ret >= stored))
-        }.reduce(_ || _)
-      val classified0 = gdeltaCk.join(cur, Seq(KeyCol), "left")
-        .withColumn("_newCnt", coalesce(col("_oc"), lit(0L)) + col(CntCol))
-        .withColumn("_rec", needRec && col("_newCnt") =!= 0)
-        .localCheckpoint() // bounded: distinct touched groups
-      // non-key count-distinct values come from the stacks (already
-      // folded to `to` above): one small left join per cd against the
-      // stack's per-group counts — never a base re-aggregation
-      val classified = stacked.foldLeft(classified0) { case (df, cd) =>
-        df.join(stackFor(cd)._2.table.read()
-            .select(col(KeyCol), col(cd.name).as(s"_nd_${cd.name}")),
-          Seq(KeyCol), "left")
-      }
-      lastRecomputedGroups = classified0.filter(col("_rec")).count()
-      val decCols: Seq[Column] =
-        Seq(when(col("_newCnt") === 0, "D").otherwise("U").as("op"),
-          col(KeyCol), lit(to).as("lsn")) ++
-          groupCols.map(col) ++
-          Seq(col("_newCnt").as(CntCol)) ++
-          sums.map(s =>
-            (coalesce(col(s"_o_${s._1}"), lit(0L)) + col(s._1)).as(s._1)) ++
-          mm.map { case (n, isMin, _) =>
-            // least/greatest skip nulls: a fresh group takes the inserted
-            // extreme, an untouched-extreme group keeps the stored one
-            val comb = if (isMin) least(col(s"_om_$n"), col(s"_ins_$n"))
-              else greatest(col(s"_om_$n"), col(s"_ins_$n"))
-            when(col("_newCnt") === 0, lit(null)).otherwise(comb).as(n)
-          } ++
-          cds.map { cd =>
-            // count(distinct key) IS the live row count; other columns'
-            // counts come from the stack join (0 for a live group whose
-            // pairs are all-null-x — count distinct ignores nulls)
-            val v: Column =
-              if (cd.xcol == base.keyCol) col("_newCnt")
-              else coalesce(col(s"_nd_${cd.name}"), lit(0L))
-            when(col("_newCnt") === 0, lit(null)).otherwise(v).as(cd.name)
-          }
-      val decRows = classified.filter(!col("_rec")).select(decCols: _*)
-      val rows =
-        if (lastRecomputedGroups == 0) decRows
-        else {
-          val recKeys = classified.filter(col("_rec"))
-            .select(col(KeyCol) +: groupCols.map(col): _*)
-          val rec = base.mergedWinners(Some(to), neededBaseCols)
-            .filter(!col(LakeTable.TombCol))
-            .drop(LakeTable.LsnCol, LakeTable.TombCol)
-            .withColumn(KeyCol, gkey)
-            .join(recKeys.select(col(KeyCol)), Seq(KeyCol), "left_semi")
-            .groupBy(col(KeyCol))
-            .agg(fullAggs.head, fullAggs.tail: _*)
-          val recCols: Seq[Column] =
-            Seq(when(col(CntCol).isNull, "D").otherwise("U").as("op"),
-              col(KeyCol), lit(to).as("lsn")) ++
-              groupCols.map(col) ++ aggNames.map(col)
-          decRows.unionByName(
-            recKeys.join(rec, Seq(KeyCol), "left").select(recCols: _*))
-        }
-      table.upsert(rows, epochId = to, reduce = false,
-        summary = Map("matview" -> s"($from,$to] hybrid"))
-      classified0.unpersist()
-      gdeltaCk.unpersist()
-      return Some(to)
-    }
-    if (recomputed.nonEmpty) {
-      // affected-group recompute: non-decomposable aggregates (min/max/
-      // distinct) cannot be retracted, so every group TOUCHED by the
-      // range — including zero-net touches, whose min/max may still have
-      // moved — is recomputed from the base as-of `to`. Cost ∝ the SIZE
-      // of the affected groups (group-restricted scan), vs the
-      // decomposable path's cost ∝ changed keys: with few giant groups
-      // prefer sums-only views, with many small groups this is cheap.
-      val affected = contribs.select(groupCols.map(col): _*).distinct()
-        .withColumn(KeyCol, gkey)
-        .localCheckpoint() // bounded: distinct touched groups
-      lastRecomputedGroups = affected.count()
-      val rec = base.mergedWinners(Some(to), neededBaseCols)
-        .filter(!col(LakeTable.TombCol))
-        .drop(LakeTable.LsnCol, LakeTable.TombCol)
-        .withColumn(KeyCol, gkey)
-        .join(affected.select(col(KeyCol)), Seq(KeyCol), "left_semi")
-        .groupBy(col(KeyCol))
-        .agg(fullAggs.head, fullAggs.tail: _*)
-      val rowCols: Seq[Column] =
-        Seq(when(col(CntCol).isNull, "D").otherwise("U").as("op"),
-          col(KeyCol), lit(to).as("lsn")) ++
-          groupCols.map(col) ++ aggNames.map(col)
-      val rows = affected.join(rec, Seq(KeyCol), "left").select(rowCols: _*)
-      table.upsert(rows, epochId = to, reduce = false,
-        summary = Map("matview" -> s"($from,$to] recompute"))
-      affected.unpersist()
-      return Some(to)
-    }
+  }
 
+  /** HYBRID fold: per group, fold cnt/sum deltas decomposably AND track
+    * the inserted-side / retracted-side extremes of every min/max agg.
+    * Zero-net groups are KEPT when any extreme value moved (a value-only
+    * update can shift a min without touching cnt or sums). */
+  private def foldHybrid(contribs: DataFrame, from: Long, to: Long,
+      mm: Seq[(String, Boolean, String)], cds: Seq[MatView.CdAgg],
+      stacked: Seq[MatView.CdAgg]): Unit = {
+    val insRet: Seq[Column] = mm.zipWithIndex.flatMap { case ((n, isMin, _), i) =>
+      val v = col(s"$MmValPrefix$i")
+      val ins = when(col(CntCol) > 0, v)
+      val ret = when(col(CntCol) < 0, v)
+      Seq((if (isMin) min(ins) else max(ins)).as(s"_ins_$n"),
+        (if (isMin) min(ret) else max(ret)).as(s"_ret_$n"))
+    }
+    val aggs = (sum(CntCol).as(CntCol) +:
+      sums.map(s => sum(s._1).as(s._1))) ++ insRet
+    // with count-distinct entries, EVERY contribution group is kept: a
+    // zero-net (cnt, sums, extremes) fold can still move a distinct
+    // count (one key's x retracted, another's inserted), and contrib
+    // groups are bounded by the batch anyway
+    val touched =
+      if (cds.nonEmpty) lit(true)
+      else mm.map(m => col(s"_ins_${m._1}").isNotNull ||
+          col(s"_ret_${m._1}").isNotNull)
+        .foldLeft(sums.map(s => col(s._1) =!= 0)
+          .foldLeft(col(CntCol) =!= 0)(_ || _))(_ || _)
+    val gdelta = contribs
+      .groupBy(groupCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(touched)
+      .withColumn(KeyCol, gkey)
+    val curCols: Seq[Column] =
+      Seq(col(KeyCol), col(CntCol).as("_oc")) ++
+        sums.map(s => col(s._1).as(s"_o_${s._1}")) ++
+        mm.map(m => col(m._1).as(s"_om_${m._1}"))
+    val (gdeltaCk, cur0) = viewCurrent(gdelta,
+      (CntCol +: sums.map(_._1)) ++ mm.map(_._1))
+    val cur = cur0.select(curCols: _*)
+    // a group needs recomputing ONLY when a retraction's value reaches
+    // its stored extreme (removing the possible last witness of the
+    // min/max) — or, defensively, when a retraction exists with no
+    // stored row to compare against. Groups whose cnt reaches 0 are
+    // tombstoned outright, no recompute needed.
+    val needRec =
+      if (mm.isEmpty) lit(false)
+      else mm.map { case (n, isMin, _) =>
+        val ret = col(s"_ret_$n"); val stored = col(s"_om_$n")
+        ret.isNotNull && (stored.isNull ||
+          (if (isMin) ret <= stored else ret >= stored))
+      }.reduce(_ || _)
+    val classified0 = gdeltaCk.join(cur, Seq(KeyCol), "left")
+      .withColumn("_newCnt", coalesce(col("_oc"), lit(0L)) + col(CntCol))
+      .withColumn("_rec", needRec && col("_newCnt") =!= 0)
+      .localCheckpoint() // bounded: distinct touched groups
+    // non-key count-distinct values come from the stacks (already
+    // folded to `to`): one small left join per cd against the stack's
+    // per-group counts — never a base re-aggregation
+    val classified = stacked.foldLeft(classified0) { case (df, cd) =>
+      df.join(stackFor(cd)._2.table.read()
+          .select(col(KeyCol), col(cd.name).as(s"_nd_${cd.name}")),
+        Seq(KeyCol), "left")
+    }
+    lastRecomputedGroups = classified0.filter(col("_rec")).count()
+    val decCols: Seq[Column] =
+      Seq(when(col("_newCnt") === 0, "D").otherwise("U").as("op"),
+        col(KeyCol), lit(to).as("lsn")) ++
+        groupCols.map(col) ++
+        Seq(col("_newCnt").as(CntCol)) ++
+        sums.map(s =>
+          (coalesce(col(s"_o_${s._1}"), lit(0L)) + col(s._1)).as(s._1)) ++
+        mm.map { case (n, isMin, _) =>
+          // least/greatest skip nulls: a fresh group takes the inserted
+          // extreme, an untouched-extreme group keeps the stored one
+          val comb = if (isMin) least(col(s"_om_$n"), col(s"_ins_$n"))
+            else greatest(col(s"_om_$n"), col(s"_ins_$n"))
+          when(col("_newCnt") === 0, lit(null)).otherwise(comb).as(n)
+        } ++
+        cds.map { cd =>
+          // count(distinct key) IS the live row count; other columns'
+          // counts come from the stack join (0 for a live group whose
+          // pairs are all-null-x — count distinct ignores nulls)
+          val v: Column =
+            if (cd.xcol == base.keyCol) col("_newCnt")
+            else coalesce(col(s"_nd_${cd.name}"), lit(0L))
+          when(col("_newCnt") === 0, lit(null)).otherwise(v).as(cd.name)
+        }
+    val decRows = classified.filter(!col("_rec")).select(decCols: _*)
+    val rows =
+      if (lastRecomputedGroups == 0) decRows
+      else {
+        val recKeys = classified.filter(col("_rec"))
+          .select(col(KeyCol) +: groupCols.map(col): _*)
+        decRows.unionByName(recomputeRows(recKeys, to))
+      }
+    table.upsert(rows, epochId = to, reduce = false,
+      summary = Map("matview" -> s"($from,$to] hybrid"))
+    classified0.unpersist()
+    gdeltaCk.unpersist()
+  }
+
+  /** View rows for the groups `keys` (KeyCol + groups) re-aggregated from
+    * the base as-of `to`; a group with no live base row left becomes a
+    * tombstone. */
+  private def recomputeRows(keys: DataFrame, to: Long): DataFrame = {
+    val rec = base.mergedWinners(Some(to), neededBaseCols)
+      .filter(!col(LakeTable.TombCol))
+      .drop(LakeTable.LsnCol, LakeTable.TombCol)
+      .withColumn(KeyCol, gkey)
+      .join(keys.select(col(KeyCol)), Seq(KeyCol), "left_semi")
+      .groupBy(col(KeyCol))
+      .agg(fullAggs.head, fullAggs.tail: _*)
+    val recCols: Seq[Column] =
+      Seq(when(col(CntCol).isNull, "D").otherwise("U").as("op"),
+        col(KeyCol), lit(to).as("lsn")) ++
+        groupCols.map(col) ++ aggNames.map(col)
+    keys.join(rec, Seq(KeyCol), "left").select(recCols: _*)
+  }
+
+  /** Affected-group recompute: non-decomposable aggregates (min/max/
+    * distinct) cannot be retracted, so every group TOUCHED by the range —
+    * including zero-net touches, whose min/max may still have moved — is
+    * recomputed from the base as-of `to`. Cost ∝ the SIZE of the affected
+    * groups (group-restricted scan), vs the decomposable path's cost ∝
+    * changed keys: with few giant groups prefer sums-only views, with
+    * many small groups this is cheap. */
+  private def foldRecompute(contribs: DataFrame, from: Long, to: Long): Unit = {
+    val affected = contribs.select(groupCols.map(col): _*).distinct()
+      .withColumn(KeyCol, gkey)
+      .localCheckpoint() // bounded: distinct touched groups
+    val snap = table.upsert(recomputeRows(affected, to), epochId = to, reduce = false,
+      summary = Map("matview" -> s"($from,$to] recompute"))
+    // the delta holds exactly one row per affected group, and its footer
+    // row count is already in the manifest — no counting job
+    lastRecomputedGroups = snap.fold(0L)(s => LakeTable.rowsIn(s.addedData))
+    affected.unpersist()
+  }
+
+  /** Decomposable fold: ±(cnt, sums) per group, merged into the current
+    * view values of the touched groups only. */
+  private def foldDecomposable(contribs: DataFrame, from: Long, to: Long): Unit = {
     lastRecomputedGroups = 0L // decomposable: never re-aggregates from base
     val gdelta = contribs
       .groupBy(groupCols.map(col): _*)
@@ -566,11 +608,9 @@ final class MatView private (
       Seq(when(col(CntCol) === 0, "D").otherwise("U").as("op"),
         col(KeyCol), lit(to).as("lsn")) ++
         groupCols.map(col) ++ Seq(col(CntCol)) ++ sums.map(s => col(s._1))
-    val rows = merged.select(rowCols: _*)
-    table.upsert(rows, epochId = to, reduce = false,
+    table.upsert(merged.select(rowCols: _*), epochId = to, reduce = false,
       summary = Map("matview" -> s"($from,$to]"))
     gdeltaCk.unpersist()
-    Some(to)
   }
 
   /** Loop [[maintain]] to the base head; returns the final frontier

@@ -32,20 +32,4 @@ object StreamingFrameShim {
   def emptyStreaming(spark: SparkSession, schema: StructType): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), Nil, isStreaming = true))
-
-  /** Run `body` with the given conf keys forced to "false" in the
-    * THREAD-LOCAL active SQLConf (a modified clone). Session-level
-    * `spark.conf.set` is invisible wherever Spark propagates a conf
-    * snapshot to the executing thread — `foreachBatch` bodies, AQE
-    * re-planning threads — which is exactly where a bucket-placed write
-    * must still see its safety pins; `SQLConf.withExistingConf` is the
-    * supported-but-`private[sql]` scoping mechanism Spark itself uses
-    * for this, re-exposed here.
-    */
-  def withConfsOff[T](keys: Seq[String])(body: => T): T = {
-    import org.apache.spark.sql.internal.SQLConf
-    val cloned = SQLConf.get.clone()
-    keys.foreach(k => cloned.setConfString(k, "false"))
-    SQLConf.withExistingConf(cloned)(body)
-  }
 }
