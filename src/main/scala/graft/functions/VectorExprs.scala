@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 
 /** Native Catalyst expression for the embedding dot product — the hot
   * scalar of similarity search. `aggregate(zip_with(...))` builds an
@@ -131,14 +132,110 @@ object HammingHex {
     else 0
 }
 
+/** Native 64-bit SimHash of one row's text, as 16 lowercase hex chars —
+  * one loop per row with `doGenCode` calling the static [[SimHash64.hash]],
+  * replacing an explode-per-word × 16 nibbles plus two shuffled
+  * aggregates (the hash is a pure function of the row). Bit-identical to
+  * the column tree it replaced (kept in the specs as the reference twin):
+  * the first `maxLen` code points (`substring(text, 1, maxLen)`), split
+  * on the ASCII space byte with empty tokens dropped, per token the top
+  * 64 bits of md5 over its UTF-8 bytes, one ±1 vote per bit, a bit set
+  * iff its vote is > 0, hex MSB first. Null or tokenless text → null.
+  * `maxLen` must be a foldable integer (checked at analysis).
+  */
+case class SimHash64(left: Expression, right: Expression)
+    extends BinaryExpression {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  // checked when the query is analysed, i.e. when the frame is built
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (!left.dataType.isInstanceOf[StringType])
+      TypeCheckResult.TypeCheckFailure(s"simhash64 text must be a string, got ${left.dataType}")
+    else if (!right.foldable || right.dataType != IntegerType)
+      TypeCheckResult.TypeCheckFailure(s"simhash64 maxLen must be a foldable integer, got $right")
+    else TypeCheckResult.TypeCheckSuccess
+
+  private lazy val maxLen: Int = right.eval().asInstanceOf[Int]
+
+  override def dataType: DataType = StringType
+
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(text: Any, len: Any): Any =
+    SimHash64.hash(text.asInstanceOf[UTF8String], maxLen)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (t, _) => {
+      val cls = classOf[SimHash64].getName
+      s"""
+         |${ev.value} = $cls.hash($t, $maxLen);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SimHash64 =
+    copy(left = newLeft, right = newRight)
+}
+
+object SimHash64 {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** Per-thread scratch: one md5 digest reused across tokens and rows. */
+  private final class Scratch {
+    val md5: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+    val votes = new Array[Int](64)
+  }
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  private val HexBytes = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** The kernel. Public static for the generated code. */
+  def hash(text: UTF8String, maxLen: Int): UTF8String = {
+    val bytes = text.substringSQL(1, maxLen).getBytes
+    val s = scratch.get()
+    val votes = s.votes
+    java.util.Arrays.fill(votes, 0)
+    var tokens = 0
+    var i = 0
+    while (i < bytes.length) {
+      while (i < bytes.length && bytes(i) == ' ') i += 1
+      val start = i
+      while (i < bytes.length && bytes(i) != ' ') i += 1
+      if (i > start) {
+        s.md5.update(bytes, start, i - start)
+        s.md5.digest(s.digest, 0, 16)
+        var h = 0L
+        var k = 0
+        while (k < 8) { h = (h << 8) | (s.digest(k) & 0xffL); k += 1 }
+        var b = 0
+        while (b < 64) { votes(b) += (((h >>> b) & 1L).toInt << 1) - 1; b += 1 }
+        tokens += 1
+      }
+    }
+    if (tokens == 0) null
+    else {
+      var sh = 0L
+      var b = 0
+      while (b < 64) { if (votes(b) > 0) sh |= 1L << b; b += 1 }
+      val out = new Array[Byte](16)
+      var c = 0
+      while (c < 16) { out(c) = HexBytes(((sh >>> (60 - 4 * c)) & 0xf).toInt); c += 1 }
+      UTF8String.fromBytes(out)
+    }
+  }
+}
+
 object VectorExprs {
   val FnName = "graft_vec_dot"
   val HammingFnName = "graft_hamming_hex"
+  val SimHashFnName = "graft_simhash64"
 
   /** Idempotently register the expressions with the session's function
     * registry (Spark 4 keeps Column↔Expression bridging private, so the
     * registry + `call_function` is the public route). A session that
-    * already has both names skips the replace — `createOrReplaceTemp
+    * already has every name skips the replace — `createOrReplaceTemp
     * Function` logs a "replacing" warning per call, and queries register
     * lazily, so a 57-query bench pass would otherwise emit hundreds of
     * lines of registry noise.
@@ -153,6 +250,9 @@ object VectorExprs {
     if (!has(HammingFnName))
       reg.createOrReplaceTempFunction(
         HammingFnName, exprs => HammingHex(exprs(0), exprs(1)), "built-in")
+    if (!has(SimHashFnName))
+      reg.createOrReplaceTempFunction(
+        SimHashFnName, exprs => SimHash64(exprs(0), exprs(1)), "built-in")
   }
 
   /** Dot product of two array<float> columns ([[register]] first). */
@@ -160,4 +260,8 @@ object VectorExprs {
 
   /** Hamming distance of two hex-digest columns ([[register]] first). */
   def hammingHex(a: Column, b: Column): Column = call_function(HammingFnName, a, b)
+
+  /** 64-bit SimHash hex of a text column ([[register]] first). */
+  def simhash64(text: Column, maxLen: Int): Column =
+    call_function(SimHashFnName, text, org.apache.spark.sql.functions.lit(maxLen))
 }

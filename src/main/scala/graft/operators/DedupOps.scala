@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
@@ -19,7 +19,11 @@ import graft.functions.TextOps
   * row is ~50 bytes and partial aggregation collapses (doc, gram) locally;
   * LSH banding turns the quadratic candidate problem into an equi-join on
   * band keys. The only quadratic step left (exact Jaccard on candidates)
-  * runs on the candidate set, not the corpus.
+  * runs on the candidate set, not the corpus. SimHash needs no shuffle at
+  * all: a document's hash is a pure function of its row, computed by the
+  * native per-row [[graft.functions.SimHash64]] kernel inside the scan's
+  * code-generated stage, so the SimHash operators key on the input ROW
+  * (one hash per row; callers de-duplicate repeated ids first).
   */
 object DedupOps {
 
@@ -128,67 +132,46 @@ object DedupOps {
 
   /** 16-bit SimHash over whitespace words: bit j of md5(word) is the top
     * bit of hex nibble j; simhash bit j = majority vote across words.
-    * Output (doc_id, simhash int).
+    * Output (doc_id, simhash int). That vote is the MSB of hex char j of
+    * [[simhash64]] (same md5 nibble, same tie rule), so this is one
+    * projection over the fused kernel's output. One hash per ROW (see
+    * [[simhash64]]).
     */
   def simhash16(docs: DataFrame, maxLen: Int): DataFrame = {
-    val words = docs
-      .select(col("doc_id"),
-        explode(split(substring(col("text"), 1, maxLen), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .select(col("doc_id"), md5(col("word")).as("h"))
-    val bits = words
-      .select(col("doc_id"), explode(sequence(lit(0), lit(15))).as("j"), col("h"))
-      .select(col("doc_id"), col("j"),
-        // nibble j of the md5 hex >= '8' → bit set → vote +1 else -1
-        when(col("h").substr(col("j") + 1, lit(1)).isin(
-          "8", "9", "a", "b", "c", "d", "e", "f"), 1).otherwise(-1).as("vote"))
-      .groupBy("doc_id", "j")
-      .agg(sum("vote").as("v"))
-    bits
-      .select(col("doc_id"),
-        when(col("v") > 0, pow(lit(2.0), col("j"))).otherwise(lit(0.0)).as("contrib"))
-      .groupBy("doc_id")
-      .agg(sum("contrib").cast("int").as("simhash"))
+    simhash64(docs, maxLen).select(col("doc_id"),
+      (0 until 16).map { j =>
+        // hex chars sort '0'..'9' < 'a'..'f': >= '8' ⇔ the nibble's top bit
+        when(col("simhash").substr(j + 1, 1) >= "8", 1 << j).otherwise(0)
+      }.reduce(_ + _).as("simhash"))
   }
-
-  private val HexDigits = "0123456789abcdef"
 
   /** 64-bit SimHash over whitespace words, emitted as a 16-hex-char string
     * (MSB-first: char i covers bits 4i..4i+3 of the md5-derived space).
     * Bit j of a word's hash = bit (3 − j mod 4) of hex nibble ⌊j/4⌋ of
-    * md5(word); simhash bit j = majority vote across words. All arithmetic
-    * is hex-digit decode (conv here, strpos in the oracle) + integer ops,
-    * so the DuckDB oracle is exact (no float, no 2^63 signed-overflow edge).
+    * md5(word); simhash bit j = majority vote across words (a tie is 0).
+    * Words are the non-empty runs between ASCII spaces of the first
+    * `maxLen` characters.
+    *
+    * Computed per row by the native [[graft.functions.SimHash64]]
+    * expression: one projection, no explode, no shuffle. The DuckDB
+    * oracle's explode-and-aggregate SQL is exact against it (hex-digit
+    * decode + integer ops, no float, no 2^63 signed-overflow edge).
+    *
+    * ROW-KEY CONTRACT: the hash is per input row, not per `doc_id` — a
+    * frame that repeats an id gets one row per occurrence (de-duplicate
+    * ids first, as [[graft.stream.DedupIngest]] does). Null or tokenless
+    * (empty / all-space) text emits no row.
     */
   def simhash64(docs: DataFrame, maxLen: Int): DataFrame = {
-    val words = docs
+    graft.functions.VectorExprs.register(docs.sparkSession)
+    // drop the rows the kernel maps to null BEFORE hashing, by its own
+    // rule (null text, or no non-space byte in the cut): a null test on
+    // the kernel's output is pushed below the projection by Catalyst and
+    // would run the kernel twice per row
+    docs
+      .filter(trim(substring(col("text"), 1, maxLen)) =!= "")
       .select(col("doc_id"),
-        explode(split(substring(col("text"), 1, maxLen), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .select(col("doc_id"), substring(md5(col("word")), 1, 16).as("h"))
-    // explode per NIBBLE (×16), not per bit (×64): the four bit-majority
-    // counters of a nibble ride one row as packed ±1 sums — 4× less
-    // explode volume and 4× fewer aggregate groups for identical output
-    val nibVal = conv(col("h").substr(col("i") + 1, lit(1)), 16, 10).cast("int")
-    def vote(weight: Int): Column =
-      sum(when(pmod(floor(col("nv") / weight).cast("int"), lit(2)) === 1, 1)
-        .otherwise(-1))
-    val nibs = words
-      .select(col("doc_id"), explode(sequence(lit(0), lit(15))).as("i"), col("h"))
-      .select(col("doc_id"), col("i"), nibVal.as("nv"))
-      .groupBy("doc_id", "i")
-      .agg(vote(8).as("v3"), vote(4).as("v2"), vote(2).as("v1"), vote(1).as("v0"))
-    // re-pack majority bits into the nibble's hex char (MSB-first)
-    val packed =
-      when(col("v3") > 0, 8).otherwise(0) + when(col("v2") > 0, 4).otherwise(0) +
-        when(col("v1") > 0, 2).otherwise(0) + when(col("v0") > 0, 1).otherwise(0)
-    nibs
-      .select(col("doc_id"), col("i"),
-        lit(HexDigits).substr(packed + 1, lit(1)).as("ch"))
-      .groupBy("doc_id")
-      .agg(concat_ws("", transform(
-        array_sort(collect_list(struct(col("i"), col("ch")))),
-        x => x.getField("ch"))).as("simhash"))
+        graft.functions.VectorExprs.simhash64(col("text"), maxLen).as("simhash"))
   }
 
   /** SimHash near-dup candidate pairs via Hamming-block banding: split the
@@ -201,13 +184,6 @@ object DedupOps {
     simhashCandidatePairs(simhash64(docs, maxLen))
       .select(col("id1"), col("id2"))
 
-  /** Banded candidate pairs over a precomputed (doc_id, simhash) frame,
-    * carrying both hashes: (id1, id2, sh1, sh2). The hash frame is
-    * materialised ONCE (localCheckpoint) before the self-join — Catalyst
-    * does not reuse the two identical aggregation subplans (verified: no
-    * ReusedExchange), and at corpus scale computing the full simhash
-    * aggregation twice doubles the most expensive stage.
-    */
   /** One row per 16-bit Hamming band of a (doc_id, simhash) frame:
     * (doc_id, blk, bval, simhash). THE band definition — every banded
     * consumer (batch candidate self-join here, the streaming admission
@@ -220,6 +196,13 @@ object DedupOps {
       .select(col("doc_id"), col("blk"),
         col("simhash").substr(col("blk") * 4 + 1, lit(4)).as("bval"), col("simhash"))
 
+  /** Banded candidate pairs over a precomputed (doc_id, simhash) frame,
+    * carrying both hashes: (id1, id2, sh1, sh2). The hash frame is
+    * materialised ONCE (localCheckpoint) before the self-join — Catalyst
+    * does not reuse the two identical subplans (verified: no
+    * ReusedExchange), and at corpus scale hashing the corpus twice
+    * doubles the most expensive stage.
+    */
   private[graft] def simhashCandidatePairs(sh0: DataFrame,
                                            materialized: Boolean = false): DataFrame = {
     // the hash frame feeds BOTH sides of the self-join — materialise it
@@ -322,18 +305,24 @@ object DedupOps {
     // in Catalyst), so checkpointing after the union would compute the
     // caller's pair pipeline — often an LSH join + verify — twice. The
     // symmetrize itself is a cheap projection over the cached RDD.
+    // an edge with a null end (null id, or a failed cast) joins nothing:
+    // dropped here, where it feeds both paths below. The edge count is
+    // observed on the checkpoint's own job, not counted by another.
+    val edgeCount = Observation()
     val e0 = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst")).localCheckpoint()
+        col(bCol).cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .observe(edgeCount, count(lit(1)).as("n"))
+      .localCheckpoint()
     // SMALL-GRAPH FAST PATH: below the edge bound, close the components
     // driver-side with union-find — one bounded collect of two long
-    // columns (the count runs over the checkpointed RDD, no recompute).
-    // The distributed fixpoint below pays ~3 shuffles + 2 driver actions
+    // columns. The distributed fixpoint below pays ~3 shuffles + 2 driver actions
     // PER ROUND, a fixed multi-second floor that dwarfs a tiny graph;
     // same gate philosophy as a broadcast-join threshold. Results are
     // identical (min reachable id per vertex, order-insensitive), and
     // graphs past the bound — the 100 TB posture — take the distributed
     // path unchanged.
-    if (e0.count() <= driverMaxEdges) {
+    if (edgeCount.get("n").asInstanceOf[Long] <= driverMaxEdges) {
       val es = e0.collect()
       val parent = new java.util.HashMap[Long, Long](es.length * 2)
       def find(x: Long): Long = {

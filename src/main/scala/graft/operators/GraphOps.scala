@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Property-path shapes from the reference's path DSL
@@ -67,15 +67,19 @@ object GraphOps {
                         driverMaxEdges: Long = DriverClosureMaxEdges): DataFrame = {
     def cp(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint()
-    val e = cp(edges.select("src", "dst").distinct())
+    val edgeCount = Observation()
+    val e = cp(edges.select("src", "dst").distinct()
+      .observe(edgeCount, count(lit(1)).as("n")))
     // SMALL-GRAPH FAST PATH: the semi-naive loop pays a join + distinct +
     // exceptAll + checkpoint + emptiness action PER ROUND — a fixed
     // multi-second floor that dwarfs small graphs. Below the edge bound
-    // (count over the checkpointed RDD, no recompute) a driver-side BFS
-    // produces the identical pair set, type-generically; a closure that
-    // explodes past the pair bound mid-computation falls through to the
-    // distributed loop (same gate philosophy as a broadcast threshold).
-    if (e.count() <= driverMaxEdges) driverClosure(e).foreach(df => return df)
+    // (counted by an observation on the checkpoint's own job, no extra
+    // action) a driver-side BFS produces the identical pair set,
+    // type-generically; a closure that explodes past the pair bound
+    // mid-computation falls through to the distributed loop (same gate
+    // philosophy as a broadcast threshold).
+    if (edgeCount.get("n").asInstanceOf[Long] <= driverMaxEdges)
+      driverClosure(e).foreach(df => return df)
     var closure = e
     var frontier = e
     var i = 0

@@ -18,7 +18,8 @@ import graft.operators.DedupOps
   * 16 hex chars per admitted doc, the column-pruned probe side. Per
   * micro-batch:
   *
-  *  1. batch docs are SimHashed (one aggregation over the BATCH only);
+  *  1. batch docs are SimHashed (one projection of the native kernel
+  *     over the id-deduplicated BATCH only; tokenless docs hash to zero);
   *  2. vs-index rejection: the index scan is banded (4 substrings — a
   *     narrow projection of the 16-char hash, no recompute) and joined
   *     against the BROADCAST banded batch — the pigeonhole candidate join
@@ -207,8 +208,9 @@ object DedupIngest {
     graft.functions.VectorExprs.register(batch0.sparkSession)
     graft.functions.VectorExprs.register(table.spark)
     // one row per doc_id, content-addressed tie-break: real feeds re-emit
-    // ids, and duplicate ids would otherwise (a) blend both rows' words
-    // into one simhash and (b) leave the docs-sink winner partition-order
+    // ids, and duplicate ids would otherwise (a) carry one simhash per
+    // row (the kernel hashes rows, not ids) into the index upsert and
+    // (b) leave the docs-sink winner partition-order
     // dependent — breaking the deterministic-replay argument the
     // two-table exactly-once rests on
     // tie-break over a digest of the FULL row, not just text: two rows
@@ -243,16 +245,15 @@ object DedupIngest {
         Seq("doc_id"), "left_semi")
     // batch-side hashes: small (one row per batch doc) — checkpointed so
     // the banded join, the in-batch pair join, and the upsert all reuse
-    // one computation instead of re-running the simhash aggregation.
-    // simhash64 emits nothing for a TOKENLESS doc (empty/whitespace
+    // one computation instead of re-running the simhash kernel.
+    // The kernel yields null for a TOKENLESS doc (null/empty/all-space
     // text) — those must not silently vanish from the corpus: they hash
     // to the zero simhash, i.e. all empty docs are exact dupes of each
     // other and the first one admitted represents them.
-    val sh = batch.select(col("doc_id"))
-      .join(DedupOps.simhash64(batch.select(col("doc_id"), col("text")), maxLen),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("simhash"), lit("0" * 16)).as("simhash"))
+    val sh = batch
+      .select(col("doc_id"), coalesce(
+        graft.functions.VectorExprs.simhash64(col("text"), maxLen),
+        lit("0" * 16)).as("simhash"))
       .localCheckpoint()
 
     // 2. vs-index: banded equi-join, batch side broadcast. Scan path

@@ -54,4 +54,22 @@ class GraphPropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("connected components: null and uncastable ids are dropped on both paths") {
+    def labels(pairs: org.apache.spark.sql.DataFrame, maxEdges: Long): Map[Long, Long] =
+      DedupOps.connectedComponents(pairs, "a", "b", driverMaxEdges = maxEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L)
+    val nullIds = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
+      (null, 3L), (null, null), (4L, 5L)).toDF("a", "b")
+    // a failed cast is null only outside ANSI mode (inside it, it throws)
+    val uncastable = Seq[(String, String)](("1", "2"), ("2", "x"), ("y", "3"),
+      (null, "3"), ("4", "5")).toDF("a", "b")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try Seq(nullIds, uncastable).foreach { pairs =>
+      assert(labels(pairs, DedupOps.DriverComponentsMaxEdges) == want, "driver path")
+      assert(labels(pairs, 0L) == want, "distributed path")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
 }
